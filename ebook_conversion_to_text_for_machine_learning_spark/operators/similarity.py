@@ -222,6 +222,10 @@ def lsh_banded_signatures(
     single shared hyperplane sequence, so the DuckDB oracle can rebuild the
     identical buckets. Per-row expressions only — the explode factor is
     ``n_bands``, constant in corpus size.
+
+    This is the fold-order-exact reference: its sequential float sums are
+    the SQL oracle's, so the tests compare ``lsh_banded_signatures_arrow``
+    (what every search and index entry point runs) against it.
     """
     planes = hyperplanes(dim, n_bands * band_planes)
     bands = []
@@ -249,13 +253,13 @@ def lsh_banded_signatures_arrow(
 ) -> DataFrame:
     """Production-rate banded signatures: one numpy matmul per Arrow batch.
 
-    Same (vec_id, band_id, bucket) rows as ``lsh_banded_signatures`` — the
-    expression twin keeps DuckDB-exact fold order for the oracle, this
-    path computes all ``n_bands × band_planes`` plane dots as a dense
-    (batch × dim) @ (dim × planes) product. Sign decisions agree with the
-    sequential fold whenever |dot| exceeds float summation-order noise
-    (~1e-13); a path-agreement test pins this on the test corpus, exactly
-    like ``ivf_assign_arrow``.
+    Same (vec_id, band_id, bucket) rows as the fold-order-exact reference
+    ``lsh_banded_signatures``, but all ``n_bands × band_planes`` plane
+    dots are one dense (batch × dim) @ (dim × planes) product. Sign
+    decisions agree with the sequential fold whenever |dot| exceeds float
+    summation-order noise (~1e-13); an agreement test against the
+    reference pins this on the test corpus, exactly like
+    ``ivf_assign_arrow``.
     """
     from typing import Iterator
 
@@ -375,7 +379,13 @@ def ivf_assign(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Nearest-centroid cell per vector — per-row expressions, no shuffle."""
+    """Nearest-centroid cell per vector — per-row expressions, no shuffle.
+
+    The fold-order-exact reference for ``ivf_assign_arrow``: its
+    sequential float sums are the SQL oracle's, and the literal-per-centroid
+    plan only suits small codebooks. Tests compare the Arrow kernels
+    against it.
+    """
     ranking = _cell_ranking(F.col(vec_col), centroids)
     return corpus.select(
         F.col(id_col).alias("vec_id"),
@@ -393,14 +403,14 @@ def ivf_assign_arrow(
 ) -> DataFrame:
     """Production-rate cell assignment: one numpy matmul per Arrow batch.
 
-    ``ivf_assign`` (expression-based) is the oracle-parity twin — its
-    sequential left-fold float sums are bit-identical to the SQL oracle but
-    run as interpreted higher-order functions, which caps per-row rate.
-    This path does the same (cosine DESC, centroid_id ASC) assignment as a
+    ``ivf_assign`` (expression-based) is the reference — its sequential
+    left-fold float sums are bit-identical to the SQL oracle but run as
+    interpreted higher-order functions, which caps per-row rate. This
+    path does the same (cosine DESC, centroid_id ASC) assignment as a
     dense (batch × dim) @ (dim × k) matmul — the right trade at 10^12 rows,
     where last-ulp summation-order differences are irrelevant. Cosines are
-    ROUNDED to 4 decimals before argmax, exactly as the twin and the SQL
-    oracle round: without it the parity-disagreement window per (vector,
+    ROUNDED to 4 decimals before argmax, exactly as the reference and the
+    SQL oracle round: without it the parity-disagreement window per (vector,
     cell-pair) is the full rounding quantum (~5e-5), not the ~1e-13 float
     noise. Centroids arrive sorted by id, so numpy argmax's first-match
     rule over the rounded scores reproduces the min-id tie-break.
@@ -440,13 +450,13 @@ def ivf_probe_cells_arrow(
 ) -> DataFrame:
     """Top-``nprobe`` cells per probe — one numpy matmul per Arrow batch.
 
-    The expression twin (``_cell_ranking``) inlines one struct per centroid
-    with the full centroid vector as literals: at the production
+    The expression reference (``_cell_ranking``) inlines one struct per
+    centroid with the full centroid vector as literals: at the production
     ``IVF_TARGET_CELLS = 65536`` that is millions of plan nodes and
     analysis dies before data flows (round-2 verdict finding). This path
     keeps the plan CONSTANT-SIZE in the codebook: cosines to all cells are
     a dense (batch × dim) @ (dim × cells) product, ranked by
-    (round(cos, 4) DESC, centroid_id ASC) exactly as the twin ranks —
+    (round(cos, 4) DESC, centroid_id ASC) exactly as the reference ranks —
     ``np.argsort(kind="stable")`` over the rounded scores reproduces the
     min-id tie-break because ``ivf_centroids`` returns centroids sorted by
     id. Emits (probe_id, probe_vec, probe_cell), ``nprobe`` rows per probe.
@@ -486,7 +496,7 @@ def ivf_probe_cells_arrow(
 def _probe_cell_assign(rows, centroids, nprobe: int):
     """(P, min(nprobe, cells)) cell-id matrix for pre-collected
     ``(id, vec)`` rows, aligned to the rows' order — the driver-side
-    twin of ``ivf_probe_cells_arrow``'s per-batch math through the
+    form of ``ivf_probe_cells_arrow``'s per-batch math through the
     identical helpers (``_unit_rows`` @ ``_centroid_matrix``,
     round(·,4), stable argsort → min-id tie-break): bit-identical
     assignments."""
@@ -497,23 +507,6 @@ def _probe_cell_assign(rows, centroids, nprobe: int):
     cos = np.round(_unit_rows([r[1] for r in rows]) @ mat.T, 4)
     top = np.argsort(-cos, axis=1, kind="stable")[:, :n_take]
     return ids[top]
-
-
-def _probe_cells_local(spark, rows, centroids, *, nprobe: int, id_type: str):
-    """Driver-side twin of ``ivf_probe_cells_arrow`` over pre-collected
-    ``(id, vec)`` rows (``_probe_cell_assign`` math — bit-identical).
-    Exists purely to delete a fixed per-pass Spark job when the caller
-    has already collected the probe batch for the ADC LUT
-    (``ivfpq_topk`` — the probe batch is driver-bounded by design
-    there). Emits (probe_id, probe_cell), ``nprobe`` rows per probe."""
-    schema = f"probe_id {id_type}, probe_cell long"
-    if not rows:
-        return spark.createDataFrame([], schema)
-    cells = _probe_cell_assign(rows, centroids, nprobe)
-    data = [
-        (r[0], int(c)) for r, row_cells in zip(rows, cells) for c in row_cells
-    ]
-    return spark.createDataFrame(data, schema)
 
 
 def ivf_kmeans_centroids(
@@ -557,7 +550,7 @@ def ivf_kmeans_centroids(
     fold order and then amplify through later Lloyd iterations (same
     class of window as the Arrow-vs-expression sign agreement in
     ``lsh_banded_signatures_arrow``, NOT the exact-integer convention
-    ``_pq_qdist`` uses). Unobserved on the driver corpora (path-
+    ``_pq_dist_table`` uses). Unobserved on the driver corpora (the
     agreement and oracle tests pin current behavior); if a production
     corpus ever trips it, quantize per-component contributions with the
     x10k floor-round pattern before summation at the cost of one extra
@@ -626,7 +619,6 @@ def ivf_ann_topk(
     stride: int | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign_path: str = "arrow",
     kmeans_iters: int = 0,
 ) -> DataFrame:
     """IVF approximate top-k: exact cosine over the probe's ``nprobe`` cells.
@@ -636,12 +628,9 @@ def ivf_ann_topk(
     assignment — tighter cells, same plan shape downstream.
 
     Plan shape at scale: corpus→cell assignment AND probe→cell ranking are
-    one numpy matmul per Arrow batch (``assign_path="arrow"``, the
-    production default — the plan stays constant-size in the codebook, so
-    the advertised 65536-cell setting actually runs; pass ``"expr"`` for
-    the interpreted expression twin that is bit-identical to the SQL
-    oracle's fold order and only viable for small codebooks). The search
-    then joins the cell-tagged corpus against a broadcast of
+    one numpy matmul per Arrow batch, so the plan stays constant-size in
+    the codebook and the advertised 65536-cell setting actually runs. The
+    search then joins the cell-tagged corpus against a broadcast of
     (probe × nprobe) rows keyed on cell_id, so the corpus is never
     shuffled and each item is scored at most once per probe (an item
     lives in exactly one cell).
@@ -651,33 +640,16 @@ def ivf_ann_topk(
         corpus, iters=kmeans_iters, target_cells=target_cells,
         stride=stride, vec_col=vec_col, id_col=id_col,
     )
-    if assign_path == "arrow":
-        c = ivf_assign_arrow(
-            corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
-        ).select(
-            F.col("vec_id").alias("item_id"),
-            F.col(vec_col).alias("item_vec"),
-            "cell_id",
-        )
-        probe_cells = ivf_probe_cells_arrow(
-            probes, centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("item_id"),
-            F.col(vec_col).alias("item_vec"),
-            F.element_at(_cell_ranking(F.col(vec_col), centroids), 1)["centroid_id"].alias("cell_id"),
-        )
-        probe_cells = probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-            F.explode(
-                F.transform(
-                    F.slice(_cell_ranking(F.col(vec_col), centroids), 1, nprobe),
-                    lambda s: s["centroid_id"],
-                )
-            ).alias("probe_cell"),
-        )
+    c = ivf_assign_arrow(
+        corpus, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
+    ).select(
+        F.col("vec_id").alias("item_id"),
+        F.col(vec_col).alias("item_vec"),
+        "cell_id",
+    )
+    probe_cells = ivf_probe_cells_arrow(
+        probes, centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
+    )
     return _ivf_topk_from_cells(c, probe_cells, k)
 
 
@@ -716,7 +688,6 @@ def embedding_near_dup(
     id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
-    signature_path: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, banded-LSH blocked.
 
@@ -727,16 +698,10 @@ def embedding_near_dup(
     product), then exact cosine verifies candidates only. Bucket
     cardinality is 2^band_planes per table, so selectivity is tuned to
     corpus size by widening bands — the single-table 2^8 layout this
-    replaces degenerated at scale.
-
-    ``signature_path="arrow"`` (default) computes bucket bits with one
-    numpy matmul per Arrow batch; ``"expr"`` is the interpreted
-    higher-order-function twin with oracle-exact fold order.
+    replaces degenerated at scale. Bucket bits are one numpy matmul per
+    Arrow batch (``lsh_banded_signatures_arrow``).
     """
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
-    bands = sig_fn(
+    bands = lsh_banded_signatures_arrow(
         df, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
     )
     left, right = bands.alias("l"), bands.alias("r")
@@ -812,7 +777,6 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     n_bands: int = N_BANDS,
     band_planes: int = BAND_PLANES,
-    signature_path: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: exact cosine ranked over banded-LSH candidates.
 
@@ -822,17 +786,14 @@ def lsh_ann_topk(
     (a single 2^8 table degenerates to scanning ~N/256 items per probe at
     lake scale). The probe side is broadcast; the corpus side is touched
     once to band and once to fetch candidate vectors by id. Signatures
-    default to the Arrow matmul path (``"expr"`` = oracle fold-order twin).
+    are the Arrow matmul kernel (``lsh_banded_signatures_arrow``).
     For repeated probe workloads persist the banding once with
     ``write_ann_index`` and query through ``lsh_ann_topk_indexed``.
     """
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
-    c_bands = sig_fn(
+    c_bands = lsh_banded_signatures_arrow(
         corpus, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
     ).select(F.col("vec_id").alias("item_id"), "band_id", "bucket")
-    p_bands = sig_fn(
+    p_bands = lsh_banded_signatures_arrow(
         probes, dim, vec_col=vec_col, id_col=id_col, n_bands=n_bands, band_planes=band_planes
     ).select(F.col("vec_id").alias("probe_id"), "band_id", "bucket")
     items = corpus.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("item_vec"))
@@ -895,7 +856,6 @@ def write_ann_index(
     band_planes: int = BAND_PLANES,
     target_cells: int = IVF_TARGET_CELLS,
     stride: int | None = None,
-    signature_path: str = "arrow",
     centroids: list | None = None,
 ) -> None:
     """Persist the reusable halves of both ANN structures:
@@ -934,7 +894,6 @@ def write_ann_index(
         corpus, dim, path, 0, centroids, dynamic=False,
         vec_col=vec_col, id_col=id_col,
         n_bands=n_bands, band_planes=band_planes,
-        signature_path=signature_path,
     )
     spark = corpus.sparkSession
     spark.createDataFrame(
@@ -957,21 +916,17 @@ def _write_ann_batch(
     id_col: str,
     n_bands: int,
     band_planes: int,
-    signature_path: str,
 ) -> None:
     # The full build (dynamic=False) STATICALLY overwrites — truncating
     # the table dir, so a rebuild over a stale/older layout can never
     # leave conflicting partition dirs behind. Appends (dynamic=True)
     # replace only their own batch partitions.
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
     bid = F.lit(batch_id).cast("int")
     # Cluster on the partition key before each partitioned write — one
     # file per partition dir instead of one per (task × dir); see
     # dedup.write_minhash_index for the measured small-files blowup.
     bands = (
-        sig_fn(
+        lsh_banded_signatures_arrow(
             corpus, dim, vec_col=vec_col, id_col=id_col,
             n_bands=n_bands, band_planes=band_planes,
         )
@@ -1015,7 +970,6 @@ def append_to_ann_index(
     batch_id: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    signature_path: str = "arrow",
 ) -> None:
     """Grow a ``write_ann_index`` index by one batch — O(batch).
 
@@ -1041,7 +995,6 @@ def append_to_ann_index(
         corpus_batch, idx.dim, path, batch_id, idx.centroids, dynamic=True,
         vec_col=vec_col, id_col=id_col,
         n_bands=idx.n_bands, band_planes=idx.band_planes,
-        signature_path=signature_path,
     )
 
 
@@ -1068,7 +1021,6 @@ def lsh_ann_topk_indexed(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    signature_path: str = "arrow",
 ) -> DataFrame:
     """``lsh_ann_topk`` against a persisted index: only the (small) probe
     side is banded; the corpus-side signatures and vectors come from the
@@ -1081,11 +1033,8 @@ def lsh_ann_topk_indexed(
     ``cells/`` scan stays full: it is the id→vector fetch table here and
     band-collision candidates can live in any cell.
     """
-    sig_fn = (
-        lsh_banded_signatures_arrow if signature_path == "arrow" else lsh_banded_signatures
-    )
     p_bands = (
-        sig_fn(
+        lsh_banded_signatures_arrow(
             probes, index.dim, vec_col=vec_col, id_col=id_col,
             n_bands=index.n_bands, band_planes=index.band_planes,
         )
@@ -1231,35 +1180,18 @@ def ivf_ann_topk_indexed(
     nprobe: int = IVF_NPROBE,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    probe_path: str = "arrow",
 ) -> DataFrame:
     """``ivf_ann_topk`` against a persisted index: cell assignment comes
-    from the index; only probe→cell ranking runs per query batch
-    (``probe_path="expr"`` is the literal-expression twin — small
-    codebooks only).
+    from the index; only probe→cell ranking runs per query batch.
 
     The ``cells/`` scan partition-prunes on the probed cells' partition
     keys (probes × nprobe ids, bounded by ``_CELL_PARTITIONS``): at the
     advertised 65536-cell setting a probe batch reads only the cell
     groups it actually ranks, not the corpus-scale table.
     """
-    if probe_path == "arrow":
-        probe_cells = ivf_probe_cells_arrow(
-            probes, index.centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
-        )
-    else:
-        probe_cells = probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("probe_vec"),
-            F.explode(
-                F.transform(
-                    F.slice(
-                        _cell_ranking(F.col(vec_col), index.centroids), 1, nprobe
-                    ),
-                    lambda s: s["centroid_id"],
-                )
-            ).alias("probe_cell"),
-        )
+    probe_cells = ivf_probe_cells_arrow(
+        probes, index.centroids, nprobe=nprobe, vec_col=vec_col, id_col=id_col
+    )
     cells = index.cells
     if "cell_pfx" in cells.columns:
         probe_cells = probe_cells.localCheckpoint()
@@ -1399,10 +1331,7 @@ def pq_kmeans_codebooks(
                 x = np.stack(
                     [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
                 )
-                xs = x.reshape(len(x), m, 1, d0)
-                diff = xs - _cb[None, :, :, :]
-                q = np.floor(diff * diff * 10000.0 + 0.5).astype(np.int64).sum(-1)
-                codes = np.argmin(q, axis=2)  # (n, m)
+                codes = np.argmin(_pq_dist_table(x, _cb), axis=2)  # (n, m)
                 sub = x.reshape(len(x), m, d0)
                 frames = []
                 for s in range(m):
@@ -1452,69 +1381,6 @@ def pq_kmeans_codebooks(
     return books
 
 
-def _pq_qdist(sub: Column, centroid: list) -> Column:
-    """Quantized squared L2 distance between a subvector column and a
-    codebook entry: ``Σ_i floor((x_i − c_i)² · 10⁴ + 0.5)`` as BIGINT.
-
-    Quantizing PER COMPONENT before the sum makes the distance an exact
-    integer in every engine — a float Σ(x−c)² rounded at the end would
-    inherit the engine's summation order (numpy sums pairwise, SQL
-    engines fold left), and ADC then ranks by SUMS of these quantities,
-    compounding the noise. Integer addition is associative; the only
-    residual parity window is a product landing within one ulp of a
-    .5 quantization boundary, the same accepted class as every other
-    x10k operator in this module.
-    """
-    lit = F.array(*[F.lit(float(c)) for c in centroid])
-    return F.aggregate(
-        F.zip_with(
-            sub,
-            lit,
-            lambda x, c: F.floor(
-                (x.cast("double") - c) * (x.cast("double") - c) * F.lit(10000.0)
-                + F.lit(0.5)
-            ).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def pq_encode_expr(
-    corpus: DataFrame,
-    codebooks: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Expression-twin PQ encoder — oracle-parity path, small codebooks
-    only (the plan inlines one struct per (subspace, code); at the
-    production 8×256 setting use ``pq_encode``, whose plan is constant
-    size). Code choice per subspace: min quantized distance, ties to the
-    smaller code."""
-    m = len(codebooks)
-    d0 = len(codebooks[0][0][1])
-    subspaces = []
-    for s, book in enumerate(codebooks):
-        sub = F.slice(F.col(vec_col), s * d0 + 1, d0)
-        ranking = F.sort_array(
-            F.array(
-                *[
-                    F.struct(
-                        _pq_qdist(sub, cvec).alias("q"),
-                        F.lit(code).cast("int").alias("code"),
-                    )
-                    for code, cvec in book
-                ]
-            )
-        )
-        subspaces.append(F.element_at(ranking, 1)["code"])
-    return corpus.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.array(*subspaces).alias("codes"),
-    )
-
-
 def _codebook_tensor(codebooks: list):
     """(m, k, d0) float64 tensor from ``pq_codebooks`` output."""
     import numpy as np
@@ -1524,42 +1390,62 @@ def _codebook_tensor(codebooks: list):
     )
 
 
-def _adc_lut(rows, cb):
-    """(sorted probe ids, probes × m × k int64 LUT) for the Arrow ADC
-    kernels, from collected ``(id, vec)`` rows and a ``_codebook_tensor``.
+def _pq_dist_table(x, cb):
+    """(n, m, k) int64 quantized squared L2 distances from the rows of
+    ``x`` (n × dim float64) to every entry of a ``_codebook_tensor``:
+    ``Σ_i floor((x_i − c_i)² · 10⁴ + 0.5)`` per (subspace, code).
 
-    Quantization is the per-dimension ``_pq_qdist`` exact-integer rule
-    (floor(d²·10⁴ + 0.5) per dimension, int64 sum), identical in both
-    kernels and the SQL oracle. Built CHUNKED with in-place ufuncs: the
-    one-shot ``(P, m, k, d0)`` broadcast formulation allocated ~800 MB
-    of temporaries and cost 2.5-3.5 s of serial DRIVER time per pass at
-    1024 probes (measured; the single largest fixed cost in the r4 ANN
-    scaling series) — 64-probe chunks keep temporaries cache-resident
-    at ~0.12 s, bit-identical output."""
+    The one PQ quantization rule — encoding, Lloyd training and the ADC
+    LUT all call it, and the SQL oracle spells out the same sum.
+    Quantizing PER COMPONENT before the sum makes the distance an exact
+    integer in every engine — a float Σ(x−c)² rounded at the end would
+    inherit the engine's summation order (numpy sums pairwise, SQL
+    engines fold left), and ADC then ranks by SUMS of these quantities,
+    compounding the noise. Integer addition is associative; the only
+    residual parity window is a product landing within one ulp of a
+    .5 quantization boundary, the same accepted class as every other
+    x10k operator in this module.
+
+    Built CHUNKED with in-place ufuncs: the one-shot ``(n, m, k, d0)``
+    broadcast allocated ~800 MB of temporaries and cost 2.5-3.5 s of
+    serial DRIVER time per pass for a 1024-probe LUT (measured; the
+    single largest fixed cost in the r4 ANN scaling series) — 64-row
+    chunks keep temporaries cache-resident at ~0.12 s, bit-identical
+    output."""
     import numpy as np
 
     m, k, d0 = cb.shape
-    probe_ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
-    order = np.argsort(probe_ids)
-    probe_ids = probe_ids[order]
-    x = np.stack(
-        [np.asarray(rows[i][1], dtype=np.float64) for i in order]
-    ).reshape(len(rows), m, 1, d0)
-    lut = np.empty((len(rows), m, k), dtype=np.int64)
-    for s in range(0, len(rows), 64):
-        d = x[s : s + 64] - cb[None, :, :, :]
+    xs = x.reshape(len(x), m, 1, d0)
+    out = np.empty((len(x), m, k), dtype=np.int64)
+    for s in range(0, len(x), 64):
+        d = xs[s : s + 64] - cb[None, :, :, :]
         np.multiply(d, d, out=d)
         d *= 10000.0
         d += 0.5
         np.floor(d, out=d)
-        lut[s : s + 64] = d.astype(np.int64).sum(-1)
+        out[s : s + 64] = d.astype(np.int64).sum(-1)
+    return out
+
+
+def _adc_lut(rows, cb):
+    """(sorted probe ids, probes × m × k LUT) for the Arrow ADC kernels,
+    from collected ``(id, vec)`` rows and a ``_codebook_tensor``; entries
+    are ``_pq_dist_table`` integers."""
+    import numpy as np
+
+    probe_ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    order = np.argsort(probe_ids)
+    probe_ids = probe_ids[order]
+    lut = _pq_dist_table(
+        np.stack([np.asarray(rows[i][1], dtype=np.float64) for i in order]), cb
+    )
     if lut.size and 0 <= lut.min() and lut.max() <= np.iinfo(np.int32).max:
         # Same values, half the bytes: the int32 table keeps the
         # 1024-probe LUT LLC-resident where the int64 one spilled to
         # DRAM — measured 2→8-process gather scaling 0.67 (int64) vs
         # 0.99 (int32) on this VM, +38% absolute at 8 workers. The
-        # kernels accumulate in int64 (explicit sum dtype / int64
-        # accumulator array), so scores are bit-identical; values that
+        # kernels accumulate into int64 score arrays, so scores are
+        # bit-identical; values that
         # genuinely exceed int32 (pathological unnormalized vectors)
         # keep the int64 table.
         lut = lut.astype(np.int32)
@@ -1577,9 +1463,10 @@ def pq_encode(
     constant in the codebook (the round-2 IVF literal-expression lesson,
     applied from the start). Emits (vec_id, codes array<int>).
 
-    The quantized per-component distance (``_pq_qdist``) is an exact
-    integer, so this path and ``pq_encode_expr`` agree EXACTLY — not
-    just within float noise (pinned by the path-agreement test).
+    Code choice per subspace: min ``_pq_dist_table`` distance, ties to
+    the smaller code. The distances are exact integers, so the codes
+    match the SQL oracle and a brute-force reference EXACTLY — not just
+    within float noise.
     """
     from typing import Iterator
 
@@ -1587,16 +1474,13 @@ def pq_encode(
     import pandas as pd
 
     cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m, _, d0 = cb.shape
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in it:
             x = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
             )  # (n, dim)
-            xs = x.reshape(len(x), m, 1, d0)  # (n, m, 1, d0)
-            diff = xs - cb[None, :, :, :]  # (n, m, k, d0)
-            q = np.floor(diff * diff * 10000.0 + 0.5).astype(np.int64).sum(-1)
+            q = _pq_dist_table(x, cb)  # (n, m, k)
             codes = np.argmin(q, axis=2).astype(np.int32)  # first-match = min code
             yield pd.DataFrame(
                 {
@@ -1607,63 +1491,6 @@ def pq_encode(
 
     return corpus.select(id_col, vec_col).mapInPandas(
         batches, schema="vec_id long, codes array<int>"
-    )
-
-
-def pq_probe_tables_arrow(
-    probes: DataFrame,
-    codebooks: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Production path for the per-probe ADC tables: one numpy pass per
-    Arrow batch, plan CONSTANT-size in the codebook. The expression twin
-    (``pq_probe_tables``) inlines one struct per (subspace, code) — at
-    the production 8×256 setting that is thousands of plan nodes and
-    planning dominated wall time 86s vs ~1s (measured, 20k corpus; the
-    same lesson as the round-2 IVF probe-ranking verdict). The quantized
-    distances are exact integers, so the two paths agree EXACTLY (pinned
-    by the path-agreement test)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m, k, d0 = cb.shape
-    for book in codebooks:
-        if [c for c, _ in book] != list(range(k)):
-            raise ValueError(
-                "pq_probe_tables_arrow: codebook codes must be dense ranks "
-                "0..k-1 (pq_codebooks guarantees this)"
-            )
-    id_type = dict(probes.dtypes)[id_col]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            if not len(batch):
-                continue
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in batch[vec_col]])
-            xs = x.reshape(len(x), m, 1, d0)
-            diff = xs - cb[None, :, :, :]
-            q = np.floor(diff * diff * 10000.0 + 0.5).astype(np.int64).sum(-1)
-            n = len(batch)
-            yield pd.DataFrame(
-                {
-                    "probe_id": batch[id_col].to_numpy().repeat(m * k),
-                    "subspace": np.tile(
-                        np.repeat(np.arange(m, dtype=np.int32), k), n
-                    ),
-                    "code": np.tile(
-                        np.tile(np.arange(k, dtype=np.int32), m), n
-                    ),
-                    "q": q.reshape(n, m * k).ravel(),
-                }
-            )
-
-    return probes.select(id_col, vec_col).mapInPandas(
-        batches, schema=f"probe_id {id_type}, subspace int, code int, q long"
     )
 
 
@@ -1680,8 +1507,8 @@ def _require_integral_id(df: DataFrame, col: str, where: str) -> None:
     if dtype not in _INTEGRAL_TYPES:
         raise TypeError(
             f"{where}: id column '{col}' must be an integral type for the "
-            f"Arrow LUT path (got {dtype!r}); map arbitrary ids to dense "
-            "integer positions first, or use the join formulation"
+            f"Arrow LUT path (got {dtype!r}); map ids to dense integer "
+            "positions"
         )
 
 
@@ -1696,9 +1523,7 @@ def pq_adc_scan_arrow(
 ) -> DataFrame:
     """Brute-force ADC scan: every corpus code row scored against ALL
     probes with one numpy LUT gather per accumulated Arrow batch — the
-    full-scan sibling of ``pq_adc_scores_arrow`` (which requires
-    pre-paired (probe, item) candidates and so can't serve the non-IVF
-    scan).
+    full-scan sibling of the inverted-list ``pq_adc_cell_scan_arrow``.
 
     Per accumulated chunk the kernel gathers ``LUT[probe, s, code]`` for
     the whole chunk × a block of probes at once (probe blocks sized so
@@ -1712,9 +1537,9 @@ def pq_adc_scan_arrow(
     is EXACTLY unchanged while output shrinks from |corpus| × |probes|
     to chunks × probes × R rows.
 
-    Scores use the ``_pq_qdist`` exact-integer rule: bit-identical to
-    the join formulation and the SQL oracle (path-agreement pinned by
-    test). Probe vectors are collected to build the LUT (probes × m × k
+    Scores use the ``_pq_dist_table`` exact-integer rule: bit-identical
+    to the SQL oracle and to a brute-force reference (pinned by test).
+    Probe vectors are collected to build the LUT (probes × m × k
     int64 — 16 MB at 1024×8×256), bounded by the probe batch by design.
 
     Returns (probe_id, item_id, adc_x10k) candidate rows.
@@ -1775,8 +1600,12 @@ def pq_adc_scan_arrow(
             }
         )
 
-    # Same batch-accumulation rationale as pq_adc_scores_arrow: the
-    # session Arrow batch size is PDF-tuned small; code rows are narrow.
+    # Accumulate incoming Arrow batches to ~64k rows before scoring: the
+    # session's arrow.maxRecordsPerBatch is tuned small (512) to bound
+    # giant-DOCUMENT batches, but code rows are narrow — at 512 rows per
+    # batch the per-batch Python overhead dominates and per-batch pruning
+    # never prunes (a batch holds ≤ R rows per probe already). Chunking
+    # inside the generator makes the operator independent of the knob.
     _TARGET = 65536
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1801,136 +1630,6 @@ def pq_adc_scan_arrow(
     )
 
 
-def pq_adc_scores_arrow(
-    cands_with_codes: DataFrame,
-    probes: DataFrame,
-    codebooks: list,
-    *,
-    prune_per_batch: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    probe_rows: list | None = None,
-) -> DataFrame:
-    """Production-rate ADC scoring: one numpy LUT *gather* per Arrow
-    batch over (probe_id, item_id, codes) candidate rows — the memory
-    path real IVFADC engines use, here as the Arrow twin of the join
-    formulation.
-
-    Why it exists (measured on the scaling corpus, 1024 probes × 16M
-    candidates): the join path explodes candidates ×m (131M rows),
-    probes a 2M-entry broadcast hash relation per row (cache-hostile —
-    the relation is ~100× L2), and re-aggregates with a 16M-key hash
-    groupBy; cores stall on DRAM instead of computing. This path reads
-    each candidate row ONCE, gathers ``LUT[probe, subspace, code]``
-    vectorized (the LUT tensor is probes × m × k int64 — 16 MB at
-    1024×8×256, shipped once per executor), and needs no explode, no
-    broadcast hash join, no re-aggregation.
-
-    Quantization is the ``_pq_qdist`` exact-integer rule, so scores are
-    BIT-IDENTICAL to the join path and the SQL oracle (path-agreement
-    pinned by test). ``prune_per_batch=R`` keeps only each batch's
-    top-R rows per probe by the global ordering ``(adc ASC, item ASC)``
-    — the global top-R is a subset of the union of batch top-Rs, so
-    downstream shortlist selection is EXACTLY unchanged while the
-    shortlist shuffle shrinks from |candidates| to ≈ batches × probes
-    × R rows (the standard partial-top-k trick, same spirit as
-    map-side combine).
-
-    Probe vectors are collected to the driver to build the LUT — the
-    same data volume the join path ships through its broadcast, bounded
-    by the probe batch by design. A caller that already holds the
-    collected ``(id, vec)`` rows passes them via ``probe_rows`` to skip
-    the second collect job — one of the measured fixed per-pass costs
-    in the r4 ANN scaling series.
-
-    Standalone kernel for callers with their OWN candidate generation
-    (pre-paired rows). ``ivfpq_topk`` itself no longer pairs candidates
-    as Spark rows — it defaults to the inverted-list
-    ``pq_adc_cell_scan_arrow``, which moves the pairing inside the
-    kernel and cuts the Arrow channel ~100× (measured rationale there).
-
-    Returns (probe_id, item_id, adc_x10k).
-    """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    _require_integral_id(probes, id_col, "pq_adc_scores_arrow")
-    cb = _codebook_tensor(codebooks)  # (m, k, d0)
-    m, k, d0 = cb.shape
-    rows = (
-        probe_rows
-        if probe_rows is not None
-        else probes.select(id_col, vec_col).collect()
-    )
-    probe_ids, lut = _adc_lut(rows, cb)
-    bc = cands_with_codes.sparkSession.sparkContext.broadcast((probe_ids, lut))
-    sub = np.arange(m, dtype=np.int64)
-
-    def score(chunk: pd.DataFrame) -> pd.DataFrame:
-        pids, table = bc.value
-        bp = chunk["probe_id"].to_numpy()
-        pidx = np.searchsorted(pids, bp)
-        if not np.array_equal(pids[np.clip(pidx, 0, len(pids) - 1)], bp):
-            raise ValueError(
-                "pq_adc_scores_arrow: candidate rows reference probe "
-                "ids absent from the probe frame"
-            )
-        codes_mat = np.stack(
-            [np.asarray(c, dtype=np.int64) for c in chunk["codes"]]
-        )
-        # int64 accumulation regardless of the LUT's storage dtype
-        # (int32 when values fit — see _adc_lut): identical scores.
-        q = table[pidx[:, None], sub[None, :], codes_mat].sum(
-            axis=1, dtype=np.int64
-        )
-        out = pd.DataFrame(
-            {
-                "probe_id": chunk["probe_id"].to_numpy(),
-                "item_id": chunk["item_id"].to_numpy(),
-                "adc_x10k": q,
-            }
-        )
-        if prune_per_batch is not None:
-            out = (
-                out.sort_values(["probe_id", "adc_x10k", "item_id"])
-                .groupby("probe_id", sort=False)
-                .head(prune_per_batch)
-            )
-        return out
-
-    # Accumulate incoming Arrow batches to ~64k rows before scoring: the
-    # session's arrow.maxRecordsPerBatch is tuned small (512) to bound
-    # giant-DOCUMENT batches, but candidate rows are ~50 bytes — at 512
-    # rows/batch the per-batch Python overhead dominates (~2ms × 31k
-    # batches on the scaling corpus) and per-batch pruning never prunes
-    # (a batch holds ≤ R rows per probe already). Chunking inside the
-    # generator makes the operator independent of the session knob.
-    _TARGET = 65536
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: list = []
-        n = 0
-        for batch in it:
-            if not len(batch):
-                continue
-            buf.append(batch)
-            n += len(batch)
-            if n >= _TARGET:
-                yield score(pd.concat(buf, ignore_index=True))
-                buf, n = [], 0
-        if buf:
-            yield score(pd.concat(buf, ignore_index=True))
-
-    id_type = dict(cands_with_codes.dtypes).get("item_id", "bigint")
-    p_type = dict(cands_with_codes.dtypes).get("probe_id", "bigint")
-    return cands_with_codes.select("probe_id", "item_id", "codes").mapInPandas(
-        batches,
-        schema=f"probe_id {p_type}, item_id {id_type}, adc_x10k long",
-    )
-
-
 def pq_adc_cell_scan_arrow(
     codes_with_cells: DataFrame,
     probes: DataFrame,
@@ -1948,7 +1647,7 @@ def pq_adc_cell_scan_arrow(
     expands it against the probes probing that cell in numpy — the
     (probe × candidate) pairing never exists as Spark rows.
 
-    Why it replaces the pre-paired formulation in ``ivfpq_topk``
+    Why ``ivfpq_topk`` pairs candidates here and not as Spark rows
     (measured, 131k-vector scaling corpus, 1024 probes, nprobe 8/64):
     generating candidates as a JVM join emitted |candidates| =
     |corpus| × probes-per-cell ≈ 16.7M rows and shipped them through
@@ -1961,16 +1660,16 @@ def pq_adc_cell_scan_arrow(
     drops ~100× while the gather count (the actual ADC math) is
     unchanged.
 
-    Exactness: quantization is the ``_pq_qdist`` integer rule via the
-    shared ``_adc_lut``; probe→cell assignment is the bit-identical
-    ``_probe_cell_assign``; self-matches mask to a sentinel exactly as
-    ``pq_adc_scan_arrow``. Per (cell, chunk) block the kernel keeps,
-    per probe, every pair whose score ties-or-beats the block's R-th
-    smallest — a SUPERSET of the block's (adc ASC, item ASC) top-R, and
-    each (probe, item) pair exists in exactly one block, so the union
-    provably contains the global per-probe top-R and the downstream
-    ``row_number`` shortlist is EXACTLY the join path's (path-agreement
-    pinned by test).
+    Exactness: quantization is the ``_pq_dist_table`` integer rule via
+    the shared ``_adc_lut``; probe→cell assignment is
+    ``_probe_cell_assign`` (bit-identical to ``ivf_probe_cells_arrow``);
+    self-matches mask to a sentinel exactly as ``pq_adc_scan_arrow``.
+    Per (cell, chunk) block the kernel keeps, per probe, every pair
+    whose score ties-or-beats the block's R-th smallest — a SUPERSET of
+    the block's (adc ASC, item ASC) top-R, and each (probe, item) pair
+    exists in exactly one block, so the union provably contains the
+    global per-probe top-R over the probe's cells and the downstream
+    ``row_number`` shortlist is exact (pinned by a brute-force test).
 
     Returns (probe_id, item_id, adc_x10k) candidate rows.
     """
@@ -2063,7 +1762,7 @@ def pq_adc_cell_scan_arrow(
             {"probe_id": p[keep], "item_id": i[keep], "adc_x10k": q[keep]}
         )
 
-    # Same batch-accumulation rationale as the sibling kernels.
+    # Same batch-accumulation rationale as pq_adc_scan_arrow.
     _TARGET = 65536
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2088,35 +1787,6 @@ def pq_adc_cell_scan_arrow(
     )
 
 
-def pq_probe_tables(
-    probes: DataFrame,
-    codebooks: list,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Expression twin of ``pq_probe_tables_arrow``: (probe_id, subspace,
-    code, q) built as literal structs — the oracle-parity path, small
-    codebooks only (the plan grows one struct per codebook entry)."""
-    m = len(codebooks)
-    d0 = len(codebooks[0][0][1])
-    entries = []
-    for s, book in enumerate(codebooks):
-        sub = F.slice(F.col(vec_col), s * d0 + 1, d0)
-        for code, cvec in book:
-            entries.append(
-                F.struct(
-                    F.lit(s).cast("int").alias("subspace"),
-                    F.lit(code).cast("int").alias("code"),
-                    _pq_qdist(sub, cvec).alias("q"),
-                )
-            )
-    return probes.select(
-        F.col(id_col).cast("long").alias("probe_id"),
-        F.explode(F.array(*entries)).alias("t"),
-    ).select("probe_id", "t.subspace", "t.code", "t.q")
-
-
 def pq_adc_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -2126,8 +1796,6 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     codes: DataFrame | None = None,
-    probe_path: str = "arrow",
-    scan_path: str = "arrow",
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes — the scan that reads
     8-byte codes instead of 256-byte vectors. The corpus' raw embeddings
@@ -2135,24 +1803,13 @@ def pq_adc_topk(
     ``pq_encode`` table) to skip encoding entirely. Ranking is
     (adc_x10k ASC, item_id ASC); self-matches are excluded.
 
-    ``scan_path="arrow"`` (production default) scores each accumulated
-    Arrow batch of code rows against the full probe LUT in one numpy
-    gather (``pq_adc_scan_arrow``) with per-chunk partial top-k — no
-    explode, no broadcast hash probe per row, no |probes| × |corpus|-key
-    re-aggregation. ``scan_path="join"`` is the JVM-join twin the SQL
-    oracle mirrors: corpus codes explode to ``m`` narrow int rows per
-    vector, the per-probe (m × k)-row tables broadcast, the join keys on
-    (subspace, code) and a partial-agg integer sum collapses back to one
-    ADC distance per (probe, vector). Measured (scaling corpus, 1024
-    probes × 16M candidates, see ``pq_adc_scores_arrow``): the join
-    formulation stalls cores on DRAM probing a ~100×-L2 broadcast
-    relation per exploded row — the gather path reads each code row
-    once. Exact-integer quantization makes the two paths agree
-    bit-for-bit (path-agreement test).
-
-    ``probe_path`` selects the join path's probe-table construction:
-    "arrow" = constant-size Arrow kernel, "expr" = literal-expression
-    oracle twin (small codebooks only — identical integers).
+    Each accumulated Arrow batch of code rows is scored against the full
+    probe LUT in one numpy gather (``pq_adc_scan_arrow``) with per-chunk
+    partial top-k — no ×m explode, no broadcast hash probe per row, no
+    |probes| × |corpus|-key re-aggregation. Measured (scaling corpus,
+    1024 probes × 16M candidates): a JVM join of exploded codes against
+    broadcast probe tables stalls cores on DRAM probing a ~100×-L2 hash
+    relation per exploded row; the gather reads each code row once.
 
     Returns (probe_id, item_id, adc_x10k, rank).
     """
@@ -2160,42 +1817,13 @@ def pq_adc_topk(
 
     if codes is None:
         codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
-    if scan_path == "arrow":
-        cand = pq_adc_scan_arrow(
-            codes, probes, codebooks,
-            per_probe_r=k, vec_col=vec_col, id_col=id_col,
-        )
-        w = Window.partitionBy("probe_id").orderBy(
-            F.asc("adc_x10k"), F.asc("item_id")
-        )
-        return (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("probe_id", "item_id", "adc_x10k", "rank")
-        )
-    m = len(codebooks)
-    exploded = codes.select(
-        F.col("vec_id").alias("item_id"),
-        F.posexplode("codes").alias("subspace", "code"),
-    )
-    table_fn = pq_probe_tables_arrow if probe_path == "arrow" else pq_probe_tables
-    tables = table_fn(probes, codebooks, vec_col=vec_col, id_col=id_col)
-    adc = (
-        exploded.join(
-            F.broadcast(tables),
-            ["subspace", "code"],
-        )
-        .where(F.col("item_id") != F.col("probe_id"))
-        .groupBy("probe_id", "item_id")
-        .agg(F.sum("q").alias("adc_x10k"), F.count("*").alias("_n"))
-        # A (probe, item) pair survives only with all m subspace terms —
-        # count acts as a correctness tripwire against partial joins.
-        .where(F.col("_n") == m)
-        .drop("_n")
+    cand = pq_adc_scan_arrow(
+        codes, probes, codebooks,
+        per_probe_r=k, vec_col=vec_col, id_col=id_col,
     )
     w = Window.partitionBy("probe_id").orderBy(F.asc("adc_x10k"), F.asc("item_id"))
     return (
-        adc.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("probe_id", "item_id", "adc_x10k", "rank")
     )
@@ -2211,8 +1839,6 @@ def pq_adc_rerank_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     codes: DataFrame | None = None,
-    probe_path: str = "arrow",
-    scan_path: str = "arrow",
 ) -> DataFrame:
     """ADC shortlist → exact cosine re-rank: the production PQ search
     architecture (Jégou et al.'s IVFADC+R). Raw ADC cannot order
@@ -2238,7 +1864,7 @@ def pq_adc_rerank_topk(
     r = shortlist if shortlist is not None else 5 * k
     sl = pq_adc_topk(
         corpus, probes, codebooks, k=r, vec_col=vec_col, id_col=id_col,
-        codes=codes, probe_path=probe_path, scan_path=scan_path,
+        codes=codes,
     ).select("probe_id", "item_id")
     return _exact_rerank(corpus, probes, sl, k, vec_col=vec_col, id_col=id_col)
 
@@ -2404,21 +2030,15 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     cells: DataFrame | None = None,
     codes: DataFrame | None = None,
-    adc_path: str = "arrow",
 ) -> DataFrame:
     """IVFADC — the canonical billion-scale ANN composition (Jégou et
     al.): IVF cells prune WHICH vectors to score, PQ codes decide HOW
     CHEAPLY to score them, exact re-rank restores ordering fidelity.
 
-    ``adc_path="arrow"`` (production default) runs the inverted-list
-    scan ``pq_adc_cell_scan_arrow``: each code row ships once with its
-    cell id and the kernel expands it against that cell's probes in
-    numpy with per-block top-R pruning — the candidate pairing never
-    exists as Spark rows; ``"join"`` is the JVM-join twin (broadcast
-    probe→cell candidate join, explode ×m + broadcast probe tables +
-    hash re-aggregate) whose plan the SQL oracle mirrors —
-    exact-integer quantization makes the two paths agree bit-for-bit
-    (path-agreement test).
+    ADC runs the inverted-list scan ``pq_adc_cell_scan_arrow``: each
+    code row ships once with its cell id and the kernel expands it
+    against that cell's probes in numpy with per-block top-R pruning —
+    the candidate pairing never exists as Spark rows.
 
     Cost model at lake scale: the ADC sum touches only vectors in the
     ``nprobe`` probed cells (≈ nprobe/cells of the corpus) and reads m
@@ -2426,13 +2046,8 @@ def ivfpq_topk(
     touches |probes| × shortlist vectors. Both corpus-side artifacts
     (``cells``, ``codes``) are persistable — pass them from
     ``write_ann_index``/``write_pq_index`` output so a probe batch runs
-    three broadcast-joined narrow scans and zero Arrow encodes.
-
-    Candidate generation joins the cell table against the broadcast
-    probe→cell list; ADC joins the candidates' exploded codes against
-    the broadcast per-probe tables on (probe_id, subspace, code) and
-    partial-agg sums; ranking/tie rules are identical to
-    ``pq_adc_rerank_topk`` (shortlist sizing rule documented there
+    narrow scans and zero Arrow encodes. Ranking/tie rules are identical
+    to ``pq_adc_rerank_topk`` (shortlist sizing rule documented there
     applies unchanged).
 
     Returns (probe_id, item_id, cosine, rank).
@@ -2444,58 +2059,19 @@ def ivfpq_topk(
         cells = ivf_assign_arrow(corpus, centroids, vec_col=vec_col, id_col=id_col)
     if codes is None:
         codes = pq_encode(corpus, codebooks, vec_col=vec_col, id_col=id_col)
-    # One driver-side collect of the probe batch (bounded by design —
-    # the ADC LUT needs it on the driver regardless) feeds the
-    # probe→cell assignment and the LUT build, replacing two of the
-    # measured fixed per-pass jobs from the r4 ANN scaling series (the
-    # probe-side Arrow stage and the ADC kernel's own collect) with
-    # one. Assignment math is bit-identical to ``ivf_probe_cells_arrow``
-    # (same helpers, same rounding/tie-break).
-    spark = probes.sparkSession
-    probe_rows = probes.select(id_col, vec_col).collect()
-    if adc_path == "arrow":
-        # Inverted-list scan: the (probe × candidate) pairing happens
-        # inside the kernel, never as Spark rows — see
-        # pq_adc_cell_scan_arrow for the measured reasons.
-        cwc = codes.select(F.col("vec_id").alias("item_id"), "codes").join(
-            cells.select(F.col("vec_id").alias("item_id"), "cell_id"),
-            "item_id",
-        )
-        adc = pq_adc_cell_scan_arrow(
-            cwc, probes, centroids, codebooks,
-            nprobe=nprobe, per_probe_r=r,
-            vec_col=vec_col, id_col=id_col, probe_rows=probe_rows,
-        )
-    else:
-        probe_cells = _probe_cells_local(
-            spark, probe_rows, centroids,
-            nprobe=nprobe, id_type=dict(probes.dtypes)[id_col],
-        )
-        cand = (
-            cells.join(
-                F.broadcast(probe_cells),
-                cells.cell_id == probe_cells.probe_cell,
-            )
-            .where(F.col("vec_id") != F.col("probe_id"))
-            .select("probe_id", F.col("vec_id").alias("item_id"))
-        )
-        cwc = cand.join(
-            codes.select(F.col("vec_id").alias("item_id"), "codes"), "item_id"
-        )
-        m = len(codebooks)
-        cand_codes = cwc.select(
-            "probe_id", "item_id", F.posexplode("codes").alias("subspace", "code")
-        )
-        tables = pq_probe_tables_arrow(
-            probes, codebooks, vec_col=vec_col, id_col=id_col
-        )
-        adc = (
-            cand_codes.join(F.broadcast(tables), ["probe_id", "subspace", "code"])
-            .groupBy("probe_id", "item_id")
-            .agg(F.sum("q").alias("adc_x10k"), F.count("*").alias("_n"))
-            .where(F.col("_n") == m)
-            .drop("_n")
-        )
+    # The corpus code rows meet their cell ids here; the (probe ×
+    # candidate) pairing happens inside the kernel, never as Spark rows.
+    cwc = codes.select(F.col("vec_id").alias("item_id"), "codes").join(
+        cells.select(F.col("vec_id").alias("item_id"), "cell_id"),
+        "item_id",
+    )
+    # One driver-side collect of the probe batch (bounded by design)
+    # feeds both the kernel's probe→cell assignment and its LUT build.
+    adc = pq_adc_cell_scan_arrow(
+        cwc, probes, centroids, codebooks,
+        nprobe=nprobe, per_probe_r=r, vec_col=vec_col, id_col=id_col,
+        probe_rows=probes.select(id_col, vec_col).collect(),
+    )
     wsl = Window.partitionBy("probe_id").orderBy(F.asc("adc_x10k"), F.asc("item_id"))
     sl = (
         adc.withColumn("_r", F.row_number().over(wsl))

@@ -151,8 +151,8 @@ def main() -> None:
         "batch of codes against the full probe LUT with one numpy gather "
         "and keeps a batch-local top-k, so no explode, no broadcast-hash "
         "join, and only top-k-per-batch rows reach the final "
-        "WindowGroupLimit exchange. The join formulation survives as the "
-        "oracle twin (scan_path=\"join\"); path agreement is pinned by "
+        "WindowGroupLimit exchange. The scores are exact integers, checked "
+        "against the pq_ann_topk SQL oracle and a brute-force reference in "
         "tests/test_operators.py. Raw embeddings never enter the scan "
         "when a persisted codes table is passed "
         "(tests/test_plans.py::test_pq_adc_scan_reads_codes_not_vectors).",

@@ -1,6 +1,9 @@
 """Behavioral tests for the training-data operators (beyond oracle parity):
 do the dedup/similarity operators actually find what they claim to find?"""
 
+import math
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -551,6 +554,37 @@ def _emb_df(spark, rows):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+def _qdist(a, b):
+    """Brute-force PQ distance: Σ floor((x − c)² · 10⁴ + 0.5) — the
+    exact-integer rule the engine and the SQL oracle share."""
+    return sum(math.floor((x - c) * (x - c) * 10000.0 + 0.5) for x, c in zip(a, b))
+
+
+def _pq_brute_codes(vec, books):
+    """Per-subspace code with the least ``_qdist``, ties to the smaller code."""
+    d0 = len(books[0][0][1])
+    return [
+        min(book, key=lambda e: (_qdist(vec[s * d0 : (s + 1) * d0], e[1]), e[0]))[0]
+        for s, book in enumerate(books)
+    ]
+
+
+def _pq_brute_adc(probe, codes, books):
+    """ADC distance of a raw probe to an encoded item (codes are dense ranks)."""
+    d0 = len(books[0][0][1])
+    return sum(
+        _qdist(probe[s * d0 : (s + 1) * d0], book[c][1])
+        for s, (book, c) in enumerate(zip(books, codes))
+    )
+
+
+def _cos4(a, b):
+    """round(cosine, 4) with the engine's left-fold sums."""
+    dot = sum(x * y for x, y in zip(a, b))
+    norms = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
+    return round(dot / norms, 4)
+
+
 def test_ivf_assign_and_topk_find_identical_vector(spark):
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         ivf_ann_topk,
@@ -607,12 +641,10 @@ def test_embedding_near_dup_threshold(spark):
     dup = [0.6, 0.8, 0.0, 0.0]
     ortho = [0.0, 0.0, 1.0, 0.0]
     df = _emb_df(spark, [(1, dup), (2, dup), (3, ortho)])
-    for path in ("arrow", "expr"):
-        pairs = {
-            (r.vec_a, r.vec_b): r.cosine
-            for r in embedding_near_dup(df, 4, signature_path=path).collect()
-        }
-        assert pairs == {(1, 2): 1.0}, path
+    pairs = {
+        (r.vec_a, r.vec_b): r.cosine for r in embedding_near_dup(df, 4).collect()
+    }
+    assert pairs == {(1, 2): 1.0}
 
 
 def test_pq_codebooks_constant_size_and_errors(spark):
@@ -642,50 +674,30 @@ def test_pq_codebooks_constant_size_and_errors(spark):
         pq_codebooks(corpus(100).where(F.col("vec_id") < 0), stride=1)
 
 
-def test_pq_encode_paths_agree_exactly(spark):
-    import random
-
+def test_pq_encode_matches_brute_force_argmin(spark):
+    """Per subspace, pq_encode picks the code with the least exact-integer
+    distance, ties to the smaller code. The codebook repeats every entry
+    under a second code, so every row's best distance is a tie."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         pq_codebooks,
         pq_encode,
-        pq_encode_expr,
     )
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)]
     df = _emb_df(spark, rows)
     books = pq_codebooks(df, m=2, target_codes=8)
-    arrow = {r.vec_id: list(r.codes) for r in pq_encode(df, books).collect()}
-    expr = {r.vec_id: list(r.codes) for r in pq_encode_expr(df, books).collect()}
-    # EXACT agreement (not within-noise): the per-component x10k
-    # quantization makes both paths sum identical integers.
-    assert arrow == expr and len(arrow) == 60
-
-
-def test_pq_probe_tables_paths_agree_exactly(spark):
-    import random
-
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
-        pq_codebooks,
-        pq_probe_tables,
-        pq_probe_tables_arrow,
-    )
-
-    rng = random.Random(13)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
-    df = _emb_df(spark, rows)
-    books = pq_codebooks(df, m=2, target_codes=8)
-    probes = df.where(F.col("vec_id") < 4)
-    expr = sorted(map(tuple, pq_probe_tables(probes, books).collect()))
-    arrow = sorted(map(tuple, pq_probe_tables_arrow(probes, books).collect()))
-    # EXACT equality: both paths emit the same x10k integers.
-    assert expr == arrow and len(arrow) == 4 * 2 * len(books[0])
+    k = len(books[0])
+    books = [book + [(k + c, v) for c, v in book] for book in books]
+    got = {r.vec_id: list(r.codes) for r in pq_encode(df, books).collect()}
+    vals = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
+    # EXACT agreement (not within-noise): both sum identical integers.
+    assert got == {i: _pq_brute_codes(v, books) for i, v in vals.items()}
+    assert len(got) == 60
+    assert all(c < k for codes in got.values() for c in codes)  # min code won
 
 
 def test_pq_adc_topk_is_exact_when_corpus_is_the_codebook(spark):
-    import math
-    import random
-
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         pq_adc_topk,
         pq_codebooks,
@@ -701,33 +713,25 @@ def test_pq_adc_topk_is_exact_when_corpus_is_the_codebook(spark):
 
     vals = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
 
-    def qdist(a, b):
-        return sum(
-            math.floor((x - c) * (x - c) * 10000.0 + 0.5) for x, c in zip(a, b)
-        )
-
     out = pq_adc_topk(df, df.where(F.col("vec_id") < 2), books, k=3)
     got = {}
     for r in out.collect():
         got.setdefault(r.probe_id, []).append((r.rank, r.item_id, r.adc_x10k))
     for pid in (0, 1):
         expected = sorted(
-            (qdist(vals[pid], v), i) for i, v in vals.items() if i != pid
+            (_qdist(vals[pid], v), i) for i, v in vals.items() if i != pid
         )[:3]
         assert sorted(got[pid]) == [
             (rk, i, d) for rk, (d, i) in enumerate(expected, start=1)
         ]
 
 
-def test_pq_adc_topk_scan_path_agreement(spark):
-    """The brute-force Arrow LUT-gather scan (production default) and
-    the explode×m JVM-join twin score with the same exact integers, so
-    top-k output is identical row-for-row — including rank assignment
-    under quantization ties (the per-chunk partial top-k keeps the
-    (adc ASC, item ASC) total order, so the union of chunk top-k sets
-    is a superset of the global top-k)."""
-    import random
-
+def test_pq_adc_topk_matches_brute_force_with_ties(spark):
+    """The Arrow LUT-gather scan's top-k is exactly brute-force ADC under
+    the (adc ASC, item ASC) order, including rank assignment under
+    quantization ties (the per-chunk partial top-k keeps that total
+    order, so the union of chunk top-k sets is a superset of the global
+    top-k); the re-rank is exact cosine over the brute-force shortlist."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
         pq_adc_rerank_topk,
         pq_adc_topk,
@@ -742,26 +746,38 @@ def test_pq_adc_topk_scan_path_agreement(spark):
     df = _emb_df(spark, rows)
     probes = df.where(F.col("vec_id") < 4)
     books = pq_codebooks(df, m=2, target_codes=8)
-    arrow = sorted(map(tuple, pq_adc_topk(df, probes, books, k=6).collect()))
-    join = sorted(
-        map(
-            tuple,
-            pq_adc_topk(df, probes, books, k=6, scan_path="join").collect(),
+    vals = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
+    codes = {i: _pq_brute_codes(v, books) for i, v in vals.items()}
+    order = {
+        p: sorted(
+            (_pq_brute_adc(vals[p], codes[i], books), i) for i in vals if i != p
         )
+        for p in range(4)
+    }
+
+    want = sorted(
+        (p, i, q, rank)
+        for p in range(4)
+        for rank, (q, i) in enumerate(order[p][:6], start=1)
     )
-    assert arrow == join and len(arrow) == 4 * 6
-    rr_arrow = sorted(
+    assert len(want) == 4 * 6
+    # default partitions: tie groups split across chunks (the union of
+    # chunk top-k sets); one partition: whole tie groups meet one chunk's
+    # boundary (the in-chunk (adc, item) order)
+    for frame in (df, df.coalesce(1)):
+        got = sorted(map(tuple, pq_adc_topk(frame, probes, books, k=6).collect()))
+        assert got == want
+
+    rr = sorted(
         map(tuple, pq_adc_rerank_topk(df, probes, books, k=3, shortlist=9).collect())
     )
-    rr_join = sorted(
-        map(
-            tuple,
-            pq_adc_rerank_topk(
-                df, probes, books, k=3, shortlist=9, scan_path="join"
-            ).collect(),
-        )
-    )
-    assert rr_arrow == rr_join
+    want_rr = []
+    for p in range(4):
+        ranked = sorted((-_cos4(vals[p], vals[i]), i) for _, i in order[p][:9])
+        want_rr += [
+            (p, i, -neg, rank) for rank, (neg, i) in enumerate(ranked[:3], start=1)
+        ]
+    assert rr == sorted(want_rr)
 
 
 def test_arrow_lut_paths_reject_non_integral_ids(spark):
@@ -771,8 +787,8 @@ def test_arrow_lut_paths_reject_non_integral_ids(spark):
     import pytest
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
+        pq_adc_cell_scan_arrow,
         pq_adc_scan_arrow,
-        pq_adc_scores_arrow,
         pq_codebooks,
     )
 
@@ -789,29 +805,31 @@ def test_arrow_lut_paths_reject_non_integral_ids(spark):
             per_probe_r=2,
         )
     with pytest.raises(TypeError, match="integral"):
-        pq_adc_scores_arrow(
+        pq_adc_cell_scan_arrow(
             df.selectExpr(
-                "vec_id as probe_id", "vec_id as item_id", "array(0) as codes"
+                "vec_id as item_id", "0L as cell_id", "array(0) as codes"
             ),
             str_probes,
+            [(0, [1.0, 0.0])],
             books,
+            nprobe=1,
+            per_probe_r=2,
         )
 
 
 def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
     """The inverted-list kernel (candidate pairing inside numpy, never
     as Spark rows) must emit — per probe — a SUPERSET of the global
-    (adc ASC, item ASC) top-R pairs over that probe's cells, with
-    integers identical to the pre-paired kernel's; the downstream
-    row_number shortlist is therefore path-independent."""
+    (adc ASC, item ASC) top-R pairs over that probe's cells, with the
+    brute-force ADC integers; the downstream row_number shortlist is
+    therefore exact."""
     import collections
 
     from ebook_conversion_to_text_for_machine_learning_spark.operators.similarity import (
-        _probe_cells_local,
+        _probe_cell_assign,
         ivf_assign_arrow,
         ivf_centroids,
         pq_adc_cell_scan_arrow,
-        pq_adc_scores_arrow,
         pq_codebooks,
         pq_encode,
     )
@@ -834,19 +852,17 @@ def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
         ).collect()
     }
 
-    # reference: pre-paired kernel over the SAME candidate set, unpruned
-    rows = probes.select("vec_id", "embedding").collect()
-    pc = _probe_cells_local(spark, rows, cents, nprobe=2, id_type="bigint")
-    cand = (
-        cells.join(F.broadcast(pc), cells.cell_id == pc.probe_cell)
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", F.col("vec_id").alias("item_id"))
-        .join(codes.select(F.col("vec_id").alias("item_id"), "codes"), "item_id")
-    )
-    ref = {
-        (x.probe_id, x.item_id): x.adc_x10k
-        for x in pq_adc_scores_arrow(cand, probes, books).collect()
-    }
+    # reference: brute-force ADC over every other item in the probe's cells
+    vals = {x.vec_id: [float(v) for v in x.embedding] for x in emb.collect()}
+    cell_of = {x.vec_id: x.cell_id for x in cells.collect()}
+    probe_rows = sorted((i, v) for i, v in vals.items() if i < 6)
+    ref = {}
+    for (p, pvec), pcells in zip(
+        probe_rows, _probe_cell_assign(probe_rows, cents, nprobe=2)
+    ):
+        for i, v in vals.items():
+            if i != p and cell_of[i] in set(pcells.tolist()):
+                ref[(p, i)] = _pq_brute_adc(pvec, _pq_brute_codes(v, books), books)
 
     assert set(got) <= set(ref)  # never invents a pair
     for pair, q in got.items():
@@ -854,6 +870,7 @@ def test_pq_adc_cell_scan_superset_of_topk_with_exact_scores(spark):
     by_probe = collections.defaultdict(list)
     for (p, i), q in ref.items():
         by_probe[p].append((q, i))
+    assert len(by_probe) == 6
     for p, scored in by_probe.items():
         top = {i for _, i in sorted(scored)[:r]}
         kept = {i for (pp, i) in got if pp == p}
@@ -1368,20 +1385,6 @@ def test_ivfpq_topk_recall_on_planted_neighbors(spark):
         len(v) for v in truth.values()
     )
     assert recall >= 0.85, recall
-
-    # path agreement: the Arrow LUT-gather ADC (production default,
-    # with per-batch partial top-R pruning) and the JVM-join twin score
-    # with the same exact integers, so the full composed output —
-    # shortlist membership included — is identical row-for-row.
-    arrow_rows = {tuple(r) for r in out.collect()}
-    join_rows = {
-        tuple(r)
-        for r in ivfpq_topk(
-            emb, probes, cents, books, k=5, nprobe=8, shortlist=50,
-            adc_path="join",
-        ).collect()
-    }
-    assert arrow_rows == join_rows
     emb.unpersist()
 
 
