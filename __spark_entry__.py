@@ -480,15 +480,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _extract_file_corpus(spark, corpus):
         """Shared binary-ingest query body: real file bytes → stdlib parse
-        (Arrow-batched) → extraction, projected to the ingest contract."""
-        from ebook_conversion_to_text_for_machine_learning_spark.sources.file_ingest import (
-            spans_from_binary_df,
-        )
-
+        and extraction in one Arrow crossing, projected to the ingest
+        contract."""
         bin_df = spark.createDataFrame(
-            [(name, data) for name, data in corpus], "path string, content binary"
+            [(name, data) for name, data in corpus], "doc_id string, content binary"
         )
-        extracted = extract_spans(spans_from_binary_df(bin_df))
+        extracted = extract_spans(bin_df)
         return extracted.select(
             "doc_id",
             "fmt",

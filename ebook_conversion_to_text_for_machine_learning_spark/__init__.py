@@ -10,7 +10,7 @@ reference's extracted text exactly.
 
 Layout:
 - ``core/``       pure-Python semantic cores (no Spark import; unit-testable)
-- ``operators/``  Spark operators (extraction mapInPandas, dedup, similarity,
+- ``operators/``  Spark operators (extraction mapInArrow, dedup, similarity,
                   text stats, media plumbing)
 - ``sources/``    table readers / adapters (parquet now, Iceberg DDL documented)
 - ``plans/``      end-to-end job pipeline (salting, lineage, metrics, resume)

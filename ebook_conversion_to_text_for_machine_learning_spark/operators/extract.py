@@ -19,7 +19,9 @@ documents stays within executor memory.
 
 from __future__ import annotations
 
+from operator import itemgetter
 from time import perf_counter_ns
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -33,6 +35,9 @@ from pyspark.sql.types import (
 
 from ebook_conversion_to_text_for_machine_learning_spark.core.extract import (
     extract_document,
+)
+from ebook_conversion_to_text_for_machine_learning_spark.sources.file_ingest import (
+    bytes_to_spans,
 )
 
 #: Input contract (BASELINE.json input_hint + metadata columns, SURVEY.md §1.3).
@@ -81,18 +86,17 @@ EXTRACTED_SCHEMA = StructType(
 )
 
 
-def _extract_arrow_batches(batches):
-    """One Arrow batch of documents in → one batch of extracted spans out.
+def _fold_batch(doc_ids, docs):
+    """Fold each document through ``extract_document`` and build one output
+    batch in ``EXTRACTED_SCHEMA`` — the builder both inputs of
+    ``extract_spans`` share.
 
-    Operates on Arrow buffers directly (``mapInArrow``): the nested span
-    structs are unboxed as four flat arrays + list offsets instead of one
-    Python dict per span, and the output list<struct> column is rebuilt the
-    same way — roughly 3× less (de)serialization than the pandas path for
-    this span-heavy schema.
+    ``docs`` yields ``(fmt, rows, title, author)`` per document of
+    ``doc_ids``, ``rows`` being ``(kind, text, media_ref)`` in offset
+    order. The output list<struct> column is built from four flat arrays
+    plus list offsets, never one Python dict per span.
     """
-    import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     out_span_type = pa.list_(
         pa.struct(
@@ -105,88 +109,131 @@ def _extract_arrow_batches(batches):
         )
     )
 
-    for batch in batches:
-        doc_ids = batch.column(0).to_pylist()
-        fmts = batch.column(1).to_pylist()
-        titles = batch.column(2).to_pylist()
-        authors = batch.column(3).to_pylist()
-        spans_col = batch.column(4)
-        # Flatten list<struct>: per-field flat arrays + row offsets.
-        if isinstance(spans_col, pa.ChunkedArray):
-            spans_col = spans_col.combine_chunks()
-        list_offsets = spans_col.offsets.to_pylist()
-        flat = spans_col.flatten()
-        # Null→'' happens vectorized in Arrow so row construction below is a
-        # bare zip of slices (no per-element branch).
-        kinds = pc.fill_null(flat.field("kind"), "").to_pylist()
-        texts = pc.fill_null(flat.field("text"), "").to_pylist()
-        refs = pc.fill_null(flat.field("media_ref"), "").to_pylist()
-        offs = pc.fill_null(flat.field("offset"), 0).to_numpy(zero_copy_only=False)
-        # Out-of-order detection for the whole batch in one vectorized pass:
-        # doc i needs a sort iff any adjacent decrease falls inside its slice.
-        if len(offs) > 1:
-            dec_prefix = np.concatenate(
-                ([0], np.cumsum(np.diff(offs) < 0, dtype=np.int64))
-            )
-        else:
-            dec_prefix = np.zeros(max(len(offs), 1), dtype=np.int64)
+    fmts = []
+    out_kinds: list = []
+    out_texts: list = []
+    out_refs: list = []
+    out_orders: list = []
+    out_offsets = [0]
+    n_spans_col = []
+    n_media_col = []
+    status_col = []
+    elapsed_col = []
+    for fmt, rows, title, author in docs:
+        fmts.append(fmt)
+        t_doc = perf_counter_ns()
+        result, status = extract_document(fmt, rows, title, author)
+        elapsed_col.append((perf_counter_ns() - t_doc) // 1000)
+        n_media = 0
+        for k, t, r, o in result:
+            out_kinds.append(k)
+            out_texts.append(t)
+            out_refs.append(r)
+            out_orders.append(o)
+            if k == "media_ref":
+                n_media += 1
+        out_offsets.append(len(out_kinds))
+        n_spans_col.append(len(result))
+        n_media_col.append(n_media)
+        status_col.append(status)
 
-        out_kinds: list = []
-        out_texts: list = []
-        out_refs: list = []
-        out_orders: list = []
-        out_offsets = [0]
-        n_spans_col = []
-        n_media_col = []
-        status_col = []
-        elapsed_col = []
-        base = list_offsets[0]
-        for i in range(len(doc_ids)):
-            lo, hi = list_offsets[i] - base, list_offsets[i + 1] - base
-            rows = list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi]))
-            if hi - lo > 1 and dec_prefix[hi - 1] - dec_prefix[lo] > 0:
-                order = np.argsort(offs[lo:hi], kind="stable")
-                rows = [rows[j] for j in order]
-            t_doc = perf_counter_ns()
-            result, status = extract_document(fmts[i], rows, titles[i], authors[i])
-            elapsed_col.append((perf_counter_ns() - t_doc) // 1000)
-            n_media = 0
-            for k, t, r, o in result:
-                out_kinds.append(k)
-                out_texts.append(t)
-                out_refs.append(r)
-                out_orders.append(o)
-                if k == "media_ref":
-                    n_media += 1
-            out_offsets.append(len(out_kinds))
-            n_spans_col.append(len(result))
-            n_media_col.append(n_media)
-            status_col.append(status)
-
-        out_spans = pa.ListArray.from_arrays(
-            pa.array(out_offsets, type=pa.int32()),
-            pa.StructArray.from_arrays(
-                [
-                    pa.array(out_kinds, type=pa.string()),
-                    pa.array(out_texts, type=pa.string()),
-                    pa.array(out_refs, type=pa.string()),
-                    pa.array(out_orders, type=pa.int32()),
-                ],
-                names=["kind", "text", "media_ref", "order"],
-            ),
-        ).cast(out_span_type)
-        yield pa.RecordBatch.from_arrays(
+    out_spans = pa.ListArray.from_arrays(
+        pa.array(out_offsets, type=pa.int32()),
+        pa.StructArray.from_arrays(
             [
-                pa.array(doc_ids, type=pa.string()),
-                pa.array(fmts, type=pa.string()),
-                out_spans,
-                pa.array(n_spans_col, type=pa.int32()),
-                pa.array(n_media_col, type=pa.int32()),
-                pa.array(status_col, type=pa.string()),
-                pa.array(elapsed_col, type=pa.int64()),
+                pa.array(out_kinds, type=pa.string()),
+                pa.array(out_texts, type=pa.string()),
+                pa.array(out_refs, type=pa.string()),
+                pa.array(out_orders, type=pa.int32()),
             ],
-            names=["doc_id", "fmt", "spans", "n_spans", "n_media", "status", "elapsed_us"],
+            names=["kind", "text", "media_ref", "order"],
+        ),
+    ).cast(out_span_type)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(doc_ids, type=pa.string()),
+            pa.array(fmts, type=pa.string()),
+            out_spans,
+            pa.array(n_spans_col, type=pa.int32()),
+            pa.array(n_media_col, type=pa.int32()),
+            pa.array(status_col, type=pa.string()),
+            pa.array(elapsed_col, type=pa.int64()),
+        ],
+        names=["doc_id", "fmt", "spans", "n_spans", "n_media", "status", "elapsed_us"],
+    )
+
+
+def _span_docs(batch):
+    """Unbox one batch of span documents: the nested span structs become
+    four flat arrays + list offsets instead of one Python dict per span —
+    roughly 3× less (de)serialization than the pandas path for this
+    span-heavy schema."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    fmts = batch.column(1).to_pylist()
+    titles = batch.column(2).to_pylist()
+    authors = batch.column(3).to_pylist()
+    spans_col = batch.column(4)
+    # Flatten list<struct>: per-field flat arrays + row offsets.
+    if isinstance(spans_col, pa.ChunkedArray):
+        spans_col = spans_col.combine_chunks()
+    list_offsets = spans_col.offsets.to_pylist()
+    flat = spans_col.flatten()
+    # Null→'' happens vectorized in Arrow so row construction below is a
+    # bare zip of slices (no per-element branch).
+    kinds = pc.fill_null(flat.field("kind"), "").to_pylist()
+    texts = pc.fill_null(flat.field("text"), "").to_pylist()
+    refs = pc.fill_null(flat.field("media_ref"), "").to_pylist()
+    offs = pc.fill_null(flat.field("offset"), 0).to_numpy(zero_copy_only=False)
+    # Out-of-order detection for the whole batch in one vectorized pass:
+    # doc i needs a sort iff any adjacent decrease falls inside its slice.
+    if len(offs) > 1:
+        dec_prefix = np.concatenate(
+            ([0], np.cumsum(np.diff(offs) < 0, dtype=np.int64))
         )
+    else:
+        dec_prefix = np.zeros(max(len(offs), 1), dtype=np.int64)
+
+    base = list_offsets[0]
+    for i in range(len(fmts)):
+        lo, hi = list_offsets[i] - base, list_offsets[i + 1] - base
+        rows = list(zip(kinds[lo:hi], texts[lo:hi], refs[lo:hi]))
+        if hi - lo > 1 and dec_prefix[hi - 1] - dec_prefix[lo] > 0:
+            order = np.argsort(offs[lo:hi], kind="stable")
+            rows = [rows[j] for j in order]
+        yield fmts[i], rows, titles[i], authors[i]
+
+
+def _file_docs(batch):
+    """Parse one batch of ``(doc_id, content)`` files with
+    ``bytes_to_spans`` (``doc_id`` is the path; its suffix picks the
+    parser). An unparseable file becomes a quarantine document
+    (``fmt='error'``, no spans) instead of a task failure — at 10^12 files
+    a corrupt zip must never kill a stage. Each file's bytes become a
+    Python object only while that file is parsed."""
+    doc_ids = batch.column(0).to_pylist()
+    contents = batch.column(1)
+    for i, path in enumerate(doc_ids):
+        try:
+            fmt, spans = bytes_to_spans(path, contents[i].as_py())
+        except Exception:  # noqa: BLE001 — quarantine, never fail the task
+            fmt, spans = "error", []
+        ordered = sorted(spans, key=itemgetter(3))
+        yield fmt, [(k, t, r) for k, t, r, _o in ordered], None, None
+
+
+def _extract_arrow_batches(batches):
+    """Span documents in, extracted spans out, one Arrow batch at a time."""
+    for batch in batches:
+        yield _fold_batch(batch.column(0).to_pylist(), _span_docs(batch))
+
+
+def _extract_file_batches(batches):
+    """File bytes in, extracted spans out: parse and fold in one crossing."""
+    for batch in batches:
+        yield _fold_batch(batch.column(0).to_pylist(), _file_docs(batch))
 
 
 def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
@@ -219,13 +266,34 @@ def extract_spans(
     *,
     repartition: int | None = None,
 ) -> DataFrame:
-    """Run the per-format extraction over a documents_spans DataFrame.
+    """Run the per-format extraction over a DataFrame of documents.
+
+    The input's columns pick what crosses into Python:
+
+    - ``(doc_id, content)`` — raw file bytes (``ingest_files_distributed``,
+      ``doc_id`` = path): each file is parsed by ``bytes_to_spans`` and
+      folded in the same Arrow batch, so bytes cross once and spans never
+      leave the Python worker. Any filter above this call (the resume
+      anti-join) runs before a byte is parsed.
+    - otherwise the documents_spans contract ``(doc_id, fmt, title,
+      author, spans)``.
 
     Narrow by default; pass ``repartition`` to salt-shuffle skewed inputs
-    first. Column pruning happens in the select below, so the parquet scan
-    reads only the five contract columns regardless of extra input columns.
+    first. Column pruning happens in the select below, so the scan reads
+    only the contract columns regardless of extra input columns.
+
+    Memory bound for files: ``binaryFile`` packs at most
+    ``maxPartitionBytes`` (default 128 MB) of whole files per partition,
+    and an Arrow batch never exceeds its partition, so one batch of files
+    is bounded by that knob regardless of ``maxRecordsPerBatch`` — size it
+    down for very large ebooks.
     """
-    projected = df.select("doc_id", "fmt", "title", "author", "spans")
+    if "content" in df.columns:
+        projected = df.select("doc_id", "content")
+        fold = _extract_file_batches
+    else:
+        projected = df.select("doc_id", "fmt", "title", "author", "spans")
+        fold = _extract_arrow_batches
     if repartition:
         projected = salted_repartition(projected, repartition)
-    return projected.mapInArrow(_extract_arrow_batches, schema=EXTRACTED_SCHEMA)
+    return projected.mapInArrow(fold, schema=EXTRACTED_SCHEMA)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -160,9 +161,14 @@ def run_extraction_job(
         collected = metrics_rows.collect()
         if metrics_path:
             # write the already-collected handful of rows instead of
-            # re-running the aggregation job for the sink
+            # re-running the aggregation job for the sink; from an Arrow
+            # table the rows reach the JVM without a Python-worker job
+            # (a row list would build a Python RDD), zero rows included
+            sink = pa.table(
+                {name: [row[name] for row in collected] for name in metrics_rows.columns}
+            )
             _append(
-                spark.createDataFrame(collected, metrics_rows.schema),
+                spark.createDataFrame(sink, metrics_rows.schema),
                 metrics_path,
                 catalog,
             )

@@ -14,8 +14,9 @@ supplies one, exactly matching the reference's OCR-failure path
 (ocr.py:113-115 returns "").
 
 At scale this runs distributed: ``spark.read.format("binaryFile")`` →
-``mapInPandas`` calling these per-file parsers; driver-side helpers below
-cover the CLI/compat path.
+``extract_spans``, whose one ``mapInArrow`` crossing calls these per-file
+parsers (``bytes_to_spans``) and the extraction fold together;
+driver-side helpers below cover the CLI/compat path.
 """
 
 from __future__ import annotations
@@ -410,62 +411,24 @@ def bytes_to_spans(filename: str, data: bytes) -> Tuple[str, List[InSpan]]:
     raise ValueError(f"Unsupported file type: {suffix}")
 
 
-def spans_from_binary_df(binary_df):
-    """(path, content) DataFrame → contract-schema spans via Arrow batches.
-
-    Each executor task parses whole files; unparseable files become
-    quarantine rows (``fmt='error'``, empty spans) instead of task
-    failures — at 10^12 files a corrupt zip must never kill a stage.
-
-    Memory bound: ``binaryFile`` packs at most ``maxPartitionBytes``
-    (default 128 MB) of whole files per partition, and an Arrow batch never
-    exceeds its partition, so the per-worker transfer is bounded by that
-    knob regardless of ``maxRecordsPerBatch`` — size it down for very
-    large ebooks.
-    """
-    from typing import Iterator
-
-    import pandas as pd
-
-    from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
-        INPUT_SCHEMA,
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for path, content in zip(batch["path"], batch["content"]):
-                try:
-                    fmt, spans = bytes_to_spans(path, bytes(content))
-                except Exception:  # noqa: BLE001 — quarantine, never fail the task
-                    fmt, spans = "error", []
-                rows.append(
-                    {
-                        "doc_id": path,
-                        "fmt": fmt,
-                        "title": None,
-                        "author": None,
-                        "spans": [
-                            {"kind": k, "text": t, "media_ref": r, "offset": o}
-                            for k, t, r, o in spans
-                        ],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in INPUT_SCHEMA.fields])
-
-    return binary_df.select("path", "content").mapInPandas(parse, schema=INPUT_SCHEMA)
-
-
 def ingest_files_distributed(spark, path_glob: str):
-    """Lake-scale ingest: ``binaryFile`` scan → Arrow-batched parsing."""
-    binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    return spans_from_binary_df(binary)
+    """Lake-scale ingest: the ``binaryFile`` scan as ``(doc_id, content)``
+    with ``doc_id`` = the file's path. Nothing is parsed here:
+    ``extract_spans`` parses and folds each file in one Arrow crossing, so
+    a filter between the two (the resume anti-join) drops files before
+    their bytes are parsed."""
+    return (
+        spark.read.format("binaryFile")
+        .load(path_glob)
+        .selectExpr("path AS doc_id", "content")
+    )
 
 
 def ingest_files(spark, paths: List[str], metadata_by_path: Optional[dict] = None):
     """Build the engine's input DataFrame from local files (driver-side;
-    for lake-scale ingest use binaryFile + mapInPandas with the same
-    per-file parsers)."""
+    for lake-scale ingest use ``ingest_files_distributed``, whose files
+    ``extract_spans`` parses with the same per-file parsers inside its
+    ``mapInArrow`` crossing)."""
     from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
         INPUT_SCHEMA,
     )

@@ -23,8 +23,9 @@ real); ``decode_stub=False`` raises NotImplementedError exactly where
 diff obvious.
 
 At lake scale this runs pre-ingest (fixture generation resolving
-``media_ref`` payloads), batched per file inside ``mapInPandas`` like
-``ingest_files_distributed`` — never per-row Python in the engine.
+``media_ref`` payloads), batched per file inside one ``mapInArrow``
+crossing, the way ``extract_spans`` parses ``ingest_files_distributed``
+files — never per-row Python in the engine.
 """
 
 from __future__ import annotations

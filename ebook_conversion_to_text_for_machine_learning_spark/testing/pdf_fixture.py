@@ -36,6 +36,7 @@ covering the dominant machine-generated case — or stored raw.
 
 from __future__ import annotations
 
+import functools
 import zlib
 from typing import Dict, List, Optional, Sequence, Tuple, Union
 
@@ -281,13 +282,16 @@ def _fx_sbox() -> bytes:
 
 
 _FX_SBOX = _fx_sbox()
+#: MixColumns products by 2 and 3, tabulated once from ``_fx_gf_mul``.
+_FX_MUL2 = bytes(_fx_gf_mul(a, 2) for a in range(256))
+_FX_MUL3 = bytes(_fx_gf_mul(a, 3) for a in range(256))
 
 
-def _fx_aes128_encrypt_block(key: bytes, block: bytes) -> bytes:
-    """FIPS-197 forward Cipher for 128- AND 256-bit keys — the fixture's
-    own implementation (the reader carries the InvCipher; both are
-    pinned against the official C.1/C.3 known-answer vectors, so they
-    cross-check rather than cancel)."""
+@functools.lru_cache(maxsize=16)
+def _fx_round_keys(key: bytes) -> Tuple[bytes, ...]:
+    """FIPS-197 KeyExpansion for a 128- or 256-bit key, one 16-byte round
+    key per round; expanded once per key (a CBC run reuses it per
+    block)."""
     nk = len(key) // 4
     nr = 10 if nk == 4 else 14
     words = [key[i : i + 4] for i in range(0, len(key), 4)]
@@ -303,11 +307,20 @@ def _fx_aes128_encrypt_block(key: bytes, block: bytes) -> bytes:
                     _FX_SBOX[t[0]],
                 )
             )
-            rcon = _fx_gf_mul(rcon, 2)
+            rcon = _FX_MUL2[rcon]
         elif nk > 6 and i % nk == 4:
             t = bytes(_FX_SBOX[b] for b in t)
         words.append(bytes(a ^ b for a, b in zip(words[i - nk], t)))
-    rk = [b"".join(words[4 * r : 4 * r + 4]) for r in range(nr + 1)]
+    return tuple(b"".join(words[4 * r : 4 * r + 4]) for r in range(nr + 1))
+
+
+def _fx_aes128_encrypt_block(key: bytes, block: bytes) -> bytes:
+    """FIPS-197 forward Cipher for 128- AND 256-bit keys — the fixture's
+    own implementation (the reader carries the InvCipher; both are
+    pinned against the official C.1/C.3 known-answer vectors, so they
+    cross-check rather than cancel)."""
+    rk = _fx_round_keys(key)
+    nr = len(rk) - 1
 
     def sub_shift(st: bytes) -> bytearray:
         out = bytearray(16)
@@ -317,16 +330,17 @@ def _fx_aes128_encrypt_block(key: bytes, block: bytes) -> bytes:
                 out[c * 4 + r] = _FX_SBOX[st[((c + r) % 4) * 4 + r]]
         return out
 
+    m2, m3 = _FX_MUL2, _FX_MUL3
     s = bytes(a ^ b for a, b in zip(block, rk[0]))
     for rnd in range(1, nr):
         s = sub_shift(s)
         out = bytearray(16)
         for c in range(4):
             col = s[c * 4 : c * 4 + 4]
-            out[c * 4 + 0] = _fx_gf_mul(col[0], 2) ^ _fx_gf_mul(col[1], 3) ^ col[2] ^ col[3]
-            out[c * 4 + 1] = col[0] ^ _fx_gf_mul(col[1], 2) ^ _fx_gf_mul(col[2], 3) ^ col[3]
-            out[c * 4 + 2] = col[0] ^ col[1] ^ _fx_gf_mul(col[2], 2) ^ _fx_gf_mul(col[3], 3)
-            out[c * 4 + 3] = _fx_gf_mul(col[0], 3) ^ col[1] ^ col[2] ^ _fx_gf_mul(col[3], 2)
+            out[c * 4 + 0] = m2[col[0]] ^ m3[col[1]] ^ col[2] ^ col[3]
+            out[c * 4 + 1] = col[0] ^ m2[col[1]] ^ m3[col[2]] ^ col[3]
+            out[c * 4 + 2] = col[0] ^ col[1] ^ m2[col[2]] ^ m3[col[3]]
+            out[c * 4 + 3] = m3[col[0]] ^ col[1] ^ col[2] ^ m2[col[3]]
         s = bytes(a ^ b for a, b in zip(out, rk[rnd]))
     s = sub_shift(s)
     return bytes(a ^ b for a, b in zip(s, rk[nr]))
@@ -451,12 +465,12 @@ def _fx_aes128_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-@__import__("functools").lru_cache(maxsize=2)
+@functools.lru_cache(maxsize=2)
 def _fx_r6_material(locked: bool):
     """Deterministic R6 key material, computed ONCE per process: the
-    fixture's 2.B twin stays the slow byte-wise cipher on purpose
-    (independence from the reader's T-table path), so the four ~5s
-    derivations are cached."""
+    fixture's 2.B twin stays a byte-wise cipher on purpose
+    (independence from the reader's T-table path), so the four
+    derivations (seconds each) are cached."""
     import hashlib
 
     user_pwd = b"secret" if locked else b""

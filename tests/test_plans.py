@@ -146,6 +146,42 @@ def test_resume_anti_join_is_anti(spark, tmp_path):
     assert "LeftAnti" in plan
 
 
+def test_file_resume_anti_join_runs_before_parsing(spark, tmp_path):
+    """File inputs cross into Python once, below the resume anti-join's
+    consumer: committed files are dropped before any byte is parsed."""
+    from ebook_conversion_to_text_for_machine_learning_spark.operators.extract import (
+        extract_spans,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        resume_filter,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.sources.file_ingest import (
+        ingest_files_distributed,
+    )
+
+    (tmp_path / "a.txt").write_text("Chapter 1\nHello there.", encoding="utf-8")
+    (tmp_path / "b.txt").write_text("Chapter 1\nAgain.", encoding="utf-8")
+    files = ingest_files_distributed(spark, str(tmp_path))
+    done = spark.createDataFrame(
+        [(f"file:{tmp_path}/a.txt", "committed")], "doc_id string, status string"
+    )
+    plan = plan_of(extract_spans(resume_filter(files, done)))
+    tree = plan.split("\n\n")[0].splitlines()
+    python_nodes = [i for i, l in enumerate(tree) if "MapIn" in l or "Python" in l]
+    anti = [i for i, l in enumerate(tree) if "LeftAnti" in l]
+    assert "MapInPandas" not in plan
+    assert len(python_nodes) == 1 and "MapInArrow" in tree[python_nodes[0]], plan
+    assert len(anti) == 1, plan
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    # The join is a descendant of the one Python map (later in the
+    # pre-order tree and indented deeper), so it filters the files first.
+    m, j = python_nodes[0], anti[0]
+    assert j > m and depth(tree[j]) > depth(tree[m]), plan
+
+
 def test_training_sequences_single_data_shuffle(spark):
     """The full curation chain (extract → quality → dedup → scrub → chunk →
     split) must keep exactly ONE data shuffle — the dedup aggregate; the

@@ -1,4 +1,4 @@
-"""End-to-end Spark tests: goldens through mapInPandas, pipeline, resume."""
+"""End-to-end Spark tests: goldens through the Arrow crossing, pipeline, resume."""
 
 import pytest
 
@@ -117,6 +117,67 @@ def test_pipeline_with_lineage_and_resume(spark, tmp_path):
 
     row = parts.orderBy(F.desc("doc_count")).first()
     assert row.doc_count > 0 and row.cpu_us > 0
+
+
+def test_file_input_pipeline_resume(spark, tmp_path):
+    """Resume over raw files: a second run over the same files appends
+    nothing, and a file added later is the only one processed."""
+    from pyspark.sql import functions as F
+
+    from ebook_conversion_to_text_for_machine_learning_spark.plans.pipeline import (
+        run_extraction_job,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.sources.file_ingest import (
+        ingest_files_distributed,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.testing.ebook_fixture import (
+        build_docx,
+        build_epub,
+    )
+    from ebook_conversion_to_text_for_machine_learning_spark.testing.pdf_fixture import (
+        build_pdf,
+    )
+
+    src = tmp_path / "files"
+    src.mkdir()
+    (src / "a.txt").write_text("Chapter 1\nHello there.", encoding="utf-8")
+    (src / "b.epub").write_bytes(
+        build_epub([("c1.xhtml", "<p>Chapter One</p><p>Epub body text.</p>")])
+    )
+    (src / "c.docx").write_bytes(
+        build_docx([("Chapter 1", False, None), ("Docx body.", False, None)])
+    )
+    (src / "d.pdf").write_bytes(
+        build_pdf([["Chapter 1 "], ["Pdf body text. "]], compress=True)[0]
+    )
+    (src / "e.pdf").write_bytes(b"%PDF-1.4 but truncated junk")  # quarantine
+    out, lineage = str(tmp_path / "out"), str(tmp_path / "lineage")
+
+    def run():
+        return run_extraction_job(
+            spark, ingest_files_distributed(spark, str(src)), out,
+            lineage_path=lineage, metrics_path=str(tmp_path / "metrics"),
+        )
+
+    first = run()
+    assert sum(m["docs"] for m in first["metrics"]) == 5
+    written = {r.doc_id.rsplit("/", 1)[-1]: r.fmt for r in spark.read.parquet(out).collect()}
+    assert written == {
+        "a.txt": "txt", "b.epub": "epub", "c.docx": "docx", "d.pdf": "pdf", "e.pdf": "error"
+    }
+
+    again = run()
+    assert sum(m["docs"] for m in again["metrics"]) == 0
+    assert spark.read.parquet(out).count() == 5
+
+    (src / "f.txt").write_text("Chapter 2\nLate arrival.", encoding="utf-8")
+    late = run()
+    assert sum(m["docs"] for m in late["metrics"]) == 1
+    assert spark.read.parquet(out).count() == 6
+    processed = (
+        spark.read.parquet(lineage).where(F.col("run_id") == late["run_id"]).collect()
+    )
+    assert [r.doc_id.rsplit("/", 1)[-1] for r in processed] == ["f.txt"]
 
 
 def test_documents_adapter_smoke(spark):
